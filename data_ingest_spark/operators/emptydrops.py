@@ -11,11 +11,7 @@ Spark-first design — everything keyed by ``sample`` so multi-sample
 experiments stay embarrassingly partition-parallel (the reference runs
 a sequential per-sample loop; here one lazy plan covers all samples):
 
-  - ambient profile: one filtered groupBy(sample, gene) plus a
-    per-sample window normalization. Proportional to nnz of the
-    ambient slice; the profile itself is ~|samples|·|genes| rows.
-  - log-likelihood: broadcast-join profile -> sum(count·ln p) per
-    (sample, barcode). One shuffle, proportional to nnz.
+  - ambient weights and log-likelihood: see :func:`empty_drops`.
   - p-values: deterministic normal approximation of the Monte-Carlo
     null. Under the multinomial null with T draws, LogProb has mean
     T·Σp·ln(p) and variance T·(Σp·ln²p − (Σp·ln p)²); DropletUtils'
@@ -35,54 +31,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window as W, functions as F
 
 from data_ingest_spark.functions.stats import normal_cdf
-
-
-def ambient_profile(expr: DataFrame, lower: float = 100.0,
-                    alpha: float = 0.5) -> DataFrame:
-    """Per-(sample, gene) ambient proportion from low-count barcodes,
-    with additive (Lidstone) smoothing so every gene observed in the
-    sample has p > 0. Returns (sample, gene, ambient_prop);
-    proportions sum to 1 within each sample."""
-    totals = expr.groupBy("sample", "barcode").agg(F.sum("count").alias("_t"))
-    ambient = (
-        expr.join(totals.filter(F.col("_t") <= lower), ["sample", "barcode"])
-        .groupBy("sample", "gene")
-        .agg(F.sum("count").alias("amb"))
-    )
-    all_genes = expr.select("sample", "gene").distinct()
-    smoothed = all_genes.join(ambient, ["sample", "gene"], "left").select(
-        "sample", "gene",
-        (F.coalesce(F.col("amb"), F.lit(0.0)) + F.lit(alpha)).alias("w"),
-    )
-    w_sample = W.partitionBy("sample")
-    return smoothed.select(
-        "sample", "gene",
-        (F.col("w") / F.sum("w").over(w_sample)).alias("ambient_prop"),
-    )
-
-
-def profile_moments(profile: DataFrame) -> DataFrame:
-    """Per-sample moments of ln(p) under the ambient profile:
-    m1 = Σ p·ln p (per-draw mean), m2 = Σ p·ln²p. Null variance per
-    draw is m2 − m1²."""
-    return profile.groupBy("sample").agg(
-        F.sum(F.col("ambient_prop") * F.log("ambient_prop")).alias("m1"),
-        F.sum(F.col("ambient_prop") * F.log("ambient_prop") ** 2).alias("m2"),
-    )
-
-
-def multinomial_loglik(expr: DataFrame, profile: DataFrame) -> DataFrame:
-    """Per-barcode log-multinomial likelihood under the sample's ambient
-    profile (data-dependent term Σ count·ln(p); the multinomial
-    coefficient is rank-irrelevant for same-total comparisons)."""
-    return (
-        expr.join(F.broadcast(profile), ["sample", "gene"])
-        .groupBy("sample", "barcode")
-        .agg(
-            F.sum("count").alias("Total"),
-            F.sum(F.col("count") * F.log("ambient_prop")).alias("LogProb"),
-        )
-    )
 
 
 def bh_fdr(df: DataFrame, p_col: str = "PValue", out_col: str = "FDR",

@@ -4,6 +4,8 @@ Each filter is a lazy predicate; composed filters collapse into a
 single Parquet scan with pushed-down predicates (Catalyst). Null
 semantics deliberately match R's ``subset``: ``col <= t`` drops NULL
 rows, exactly as R drops NA rows (src/QC_helpers/classifier.r:63).
+A threshold is a number or a Column (a per-sample lookup); a null
+threshold keeps no row.
 
 Reference citations:
   F1 src/QC_helpers/cellSizeDistribution.r:74
@@ -19,15 +21,16 @@ Reference citations:
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, functions as F
+from pyspark.sql import Column, DataFrame, functions as F
 
 
-def filter_min_cell_size(cells: DataFrame, min_cell_size: float) -> DataFrame:
+def filter_min_cell_size(cells: DataFrame,
+                         min_cell_size: float | Column) -> DataFrame:
     """F1: keep cells with nCount_RNA >= minCellSize."""
     return cells.filter(F.col("nCount_RNA") >= F.lit(min_cell_size))
 
 
-def filter_mt_content(cells: DataFrame, max_fraction: float = 0.1,
+def filter_mt_content(cells: DataFrame, max_fraction: float | Column = 0.1,
                       col: str = "fraction_mt") -> DataFrame:
     """F2: keep cells with fraction.mt <= maxFraction (default 0.1,
     on the [0,1] scale — ``metrics.percent_mt`` emits ``fraction_mt``
@@ -35,14 +38,15 @@ def filter_mt_content(cells: DataFrame, max_fraction: float = 0.1,
     return cells.filter(F.col(col) <= F.lit(max_fraction))
 
 
-def filter_classifier_fdr(cells: DataFrame, fdr: float = 0.01,
+def filter_classifier_fdr(cells: DataFrame, fdr: float | Column = 0.01,
                           col: str = "emptyDrops_FDR") -> DataFrame:
     """F3: keep cells with emptyDrops_FDR <= FDR; NULL rows drop
     (Spark null comparison == R subset NA semantics)."""
     return cells.filter(F.col(col) <= F.lit(fdr))
 
 
-def filter_doublet_score(cells: DataFrame, threshold: float = 0.25,
+def filter_doublet_score(cells: DataFrame,
+                         threshold: float | Column = 0.25,
                          col: str = "doublet_scores") -> DataFrame:
     """F4: keep cells with doublet_scores <= probabilityThreshold."""
     return cells.filter(F.col(col) <= F.lit(threshold))
@@ -97,11 +101,6 @@ def mt_gene_predicate(genes: DataFrame, pattern: str = "^mt-",
 def project(df: DataFrame, cols: list[str]) -> DataFrame:
     """F8: column projection (src/4_Prepare_experiment.r:178)."""
     return df.select(*cols)
-
-
-def not_hidden(df: DataFrame, name_col: str = "name") -> DataFrame:
-    """F10: skip dotfile entries (src/5_Upload-to-aws.py:92-96)."""
-    return df.filter(~F.col(name_col).startswith("."))
 
 
 def remove_outliers(cells: DataFrame, outliers: DataFrame,

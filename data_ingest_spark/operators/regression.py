@@ -12,7 +12,7 @@ Two implementations:
   expressible in ANSI SQL, so it carries the DuckDB oracle row. The
   band multiplier is a fixed z (the reference's t-quantile converges to
   z for the cell counts involved).
-- :func:`huber_rlm` — IRLS Huber fit per sample via ``applyInPandas``
+- :func:`huber_rlm_fit` — IRLS Huber fit per sample via ``applyInPandas``
   (the reference's actual estimator). Iterative ⇒ not SQL-expressible;
   covered by property tests. Each sample's (x, y) pairs fit in one
   Arrow batch at reference scale (≤ ~10^5 cells/sample); samples fit in
@@ -24,7 +24,7 @@ and emit per-cell predictions + outlier flags.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, functions as F
+from pyspark.sql import Column, DataFrame, functions as F
 from pyspark.sql.types import (DoubleType, StringType, StructField,
                                StructType)
 
@@ -87,13 +87,17 @@ _RLM_SCHEMA = StructType([
 def huber_rlm_fit(cells: DataFrame, c: float = 1.345,
                   max_iter: int = 50, tol: float = 1e-8) -> DataFrame:
     """Per-sample Huber IRLS fit (MASS::rlm defaults: tuning c=1.345,
-    MAD scale). Returns one row per sample (slope, intercept, scale)."""
+    MAD scale). Returns one row per sample (slope, intercept, scale);
+    a sample with fewer than 3 cells or a constant log10(nCount) has no
+    line to fit and gets no row."""
     pts = _xy(cells)
 
     def fit(pdf):
         import numpy as np
         import pandas as pd
         x, y = pdf["x"].to_numpy(), pdf["y"].to_numpy()
+        if len(x) < 3 or np.ptp(x) == 0:
+            return pd.DataFrame(columns=_RLM_SCHEMA.fieldNames())
         X = np.column_stack([np.ones_like(x), x])
         beta, *_ = np.linalg.lstsq(X, y, rcond=None)
         scale = 1.0
@@ -118,18 +122,22 @@ def huber_rlm_fit(cells: DataFrame, c: float = 1.345,
     return pts.groupBy("sample").applyInPandas(fit, schema=_RLM_SCHEMA)
 
 
-def huber_band_outliers(cells: DataFrame, z: float = 3.29) -> DataFrame:
+def huber_band_outliers(cells: DataFrame,
+                        z: float | Column = 3.29) -> DataFrame:
     """Full M4: Huber fit per sample, flag cells outside ±z·scale of the
     prediction (z = Phi^-1(1 - 0.001/2) ≈ 3.29, the reference's default
-    p.level=0.001 two-sided band). Returns (sample, barcode, pred,
-    is_outlier) — feed the outliers to filters.remove_outliers (F11)."""
+    p.level=0.001 two-sided band; a Column gives a per-sample z).
+    Returns (sample, barcode, pred, is_outlier) — feed the outliers to
+    filters.remove_outliers (F11). A sample huber_rlm_fit has no line
+    for gets a null pred and no outliers."""
     pts = _xy(cells)
     fit = huber_rlm_fit(cells)
     return (
-        pts.join(F.broadcast(fit), "sample")
+        pts.join(F.broadcast(fit), "sample", "left")
         .withColumn("pred", F.col("intercept") + F.col("slope") * F.col("x"))
-        .withColumn("is_outlier",
-                    F.abs(F.col("y") - F.col("pred")) > F.lit(z) * F.col("scale"))
+        .withColumn("is_outlier", F.coalesce(
+            F.abs(F.col("y") - F.col("pred")) > F.lit(z) * F.col("scale"),
+            F.lit(False)))
         .select("sample", "barcode", "x", "y", "pred", "is_outlier")
     )
 

@@ -9,13 +9,10 @@ Reference citations:
 
 Scale notes: W1/W2 windows are partitioned by sample — per-sample cell
 counts (≤ ~10^5 in the reference domain) sort within one task each.
-W5's global ordering is the one inherently serial operator; it is kept
-because the reference contract requires *dense* 0..n-1 ids
-(src/test_object.r:26-29). At 100 TB scale prefer
-``zipWithIndex``-style two-pass dense ranking (sort within partitions,
-offset by partition prefix sums) — Spark's row_number over an
-un-partitioned window funnels through a single task. The two-pass
-variant is implemented in ``dense_ids_scalable``.
+W5 needs *dense* 0..n-1 ids (src/test_object.r:26-29) without a
+row_number over an un-partitioned window, which funnels through a
+single task: ``dense_ids_scalable`` ranks within each sample and offsets
+by the prefix sums of the per-sample counts.
 """
 
 from __future__ import annotations
@@ -64,21 +61,6 @@ def top_k_genes(gene_totals: DataFrame, k: int = 30,
     return gene_totals.orderBy(F.desc(total_col), "gene").limit(k)
 
 
-def dense_ids(cells: DataFrame, order: list[str] | None = None,
-              id_col: str = "cells_id") -> DataFrame:
-    """W5: stable dense 0..n-1 ids over (sample, barcode) order.
-
-    DEPRECATED alias for :func:`dense_ids_scalable` — the historical
-    implementation was a single-task global window, which funnels the
-    whole table through one task; the scalable two-pass rank has the
-    identical output contract at any size, so this now delegates."""
-    import warnings
-    warnings.warn("dense_ids is deprecated; use dense_ids_scalable "
-                  "(identical contract, no single-task global sort)",
-                  DeprecationWarning, stacklevel=2)
-    return dense_ids_scalable(cells, order, id_col)
-
-
 def dense_ids_scalable(cells: DataFrame, order: list[str] | None = None,
                        id_col: str = "cells_id") -> DataFrame:
     """W5 at scale: dense ids without a single-task global sort.
@@ -91,15 +73,10 @@ def dense_ids_scalable(cells: DataFrame, order: list[str] | None = None,
     the same plan), so the 0..n-1 contract (test_object.r:26-29) holds
     without persisting intermediate state.
 
-    FULLY LAZY (round 7): the offsets used to be a driver-side
-    ``collect()`` folded into a literal map — an EAGER action that
-    forced the caller's whole upstream plan once for three offset
-    rows, then again when the pipeline's stage-boundary checkpoint
-    materialized (assemble_cells paid the cells aggregation twice per
-    p2 run). The offsets are now a cumulative-sum window over the
-    one-row-per-sample size aggregate, broadcast-joined back — no
-    action, one plan, and the upstream aggregation runs exactly once
-    at the next real action."""
+    Fully lazy: the offsets are a cumulative-sum window over the
+    one-row-per-sample size aggregate, broadcast-joined back, so no
+    action runs here and the upstream aggregation runs once, at the
+    caller's next action."""
     order = order or ["sample", "barcode"]
     part_key, rest = order[0], order[1:]
     # the size aggregate and the ranking window both consume the

@@ -12,6 +12,26 @@ them into ONE lazy plan — the reference's seven eager passes become a
 single Catalyst-optimized DAG; nothing materializes until the caller
 writes a checkpoint.
 
+Config layout: ``config[step][key]`` is the step-wide value and
+``config[step]["sample-<s>"][key]`` a per-sample override, which wins
+for sample ``s``. Every threshold is read through `_threshold`, one
+Column over ``sample``. The keys each step reads (default):
+
+  cellSizeDistribution  minCellSize (the per-sample W2 knee)
+  mitochondrialContent  maxFraction (0.1)
+  classifier            FDR (0.01)
+  numGenesVsNumUmis     pLevel (0.001)
+  doubletScores         probabilityThreshold (0.25)
+  dataIntegration       nfeatures (2000), numPCs (50),
+                        selection_method ("vst" | "vst_quad"),
+                        reduction, integrate (True)
+  configureEmbedding    k (20), lpaIter (10), computeEmbedding (True),
+                        driverEmbedCeiling
+
+The auto thresholds (knee, singlet max, pLevel) are computed only in
+`derive_config_per_sample`, which returns them as ``sample-<s>``
+overrides; the steps only apply them.
+
 Step ↔ reference file map:
   cellSizeDistribution  cellSizeDistribution.r  (F1 + W1/W2 auto)
   mitochondrialContent  mitochondrialContent.r  (F2)
@@ -25,9 +45,10 @@ Step ↔ reference file map:
 from __future__ import annotations
 
 from dataclasses import dataclass, field
+from statistics import NormalDist
 from typing import Any, Callable
 
-from pyspark.sql import DataFrame, functions as F
+from pyspark.sql import Column, DataFrame, functions as F
 
 from data_ingest_spark.operators import (clustering as cl, doublets as db,
                                          embedding as em, filters as fl,
@@ -56,103 +77,97 @@ def _step(name: str):
     return deco
 
 
-def _filter_cells(exp: Experiment, kept: DataFrame) -> Experiment:
-    return exp.subset_cells(kept)
+_SAMPLE = "sample-"
+
+
+def _overrides(cfg: dict, key: str) -> dict:
+    """{sample: value} of the ``sample-<s>`` overrides of ``key``."""
+    return {k[len(_SAMPLE):]: v[key] for k, v in cfg.items()
+            if k.startswith(_SAMPLE) and key in v}
+
+
+def _threshold(cfg: dict, key: str,
+               fn: Callable[[float], float] = float) -> Column:
+    """``fn(cfg[key])`` as a Column over ``sample``: a ``sample-<s>``
+    override wins over the step-wide value; null where neither is set
+    (a null threshold keeps no cell, as R's NA subset)."""
+    wide = cfg.get(key)
+    col = F.lit(None if wide is None else fn(wide)).cast("double")
+    per = _overrides(cfg, key)
+    if per:
+        by_sample = F.create_map(*[F.lit(x) for s, v in per.items()
+                                   for x in (s, fn(v))])
+        col = F.coalesce(by_sample[F.col("sample")], col)
+    return col
 
 
 @_step("cellSizeDistribution")
 def cell_size_distribution(exp: Experiment, config: dict) -> StepResult:
-    """F1 with the W2 knee auto-threshold when none is configured
-    (cellSizeDistribution.r:50-74, *_config.r:15-33); plotData =
-    barcode-rank curve (W1)."""
+    """F1 (cellSizeDistribution.r:50-74); with no minCellSize configured
+    at all, the per-sample W2 knee of derive_config_per_sample
+    (*_config.r:15-33). plotData = barcode-rank curve (W1)."""
     cfg = dict(config)
-    if cfg.get("minCellSize") is None:
-        infl = wd.barcode_inflection(
-            exp.cells, cfg.get("thresholdLow", 100.0))
-        cfg["minCellSize"] = {r["sample"]: r["inflection_ncount"]
-                              for r in infl.collect()}
-    thr = cfg["minCellSize"]
-    if isinstance(thr, dict):
-        spark = exp.cells.sparkSession
-        from data_ingest_spark.functions.localrel import arrow_local_df
-        thr_df = arrow_local_df(
-            spark, [(s, float(v)) for s, v in thr.items()],
-            "sample string, _thr double", ["sample", "_thr"])
-        kept = (exp.cells.join(F.broadcast(thr_df), "sample")
-                .filter(F.col("nCount_RNA") >= F.col("_thr")).drop("_thr"))
-    else:
-        kept = fl.filter_min_cell_size(exp.cells, float(thr))
-    return StepResult(_filter_cells(exp, kept), cfg,
+    if cfg.get("minCellSize") is None and not _overrides(cfg, "minCellSize"):
+        cfg.update(derive_config_per_sample(exp)["cellSizeDistribution"])
+    kept = fl.filter_min_cell_size(exp.cells, _threshold(cfg, "minCellSize"))
+    return StepResult(exp.subset_cells(kept), cfg,
                       {"barcode_rank": wd.barcode_rank(exp.cells)})
 
 
 @_step("mitochondrialContent")
 def mitochondrial_content(exp: Experiment, config: dict) -> StepResult:
-    """F2 (mitochondrialContent.r:38-54): fraction scale, default 0.1."""
+    """F2 (mitochondrialContent.r:38-54): fraction scale."""
     cfg = {"maxFraction": 0.1, **config}
-    kept = fl.filter_mt_content(exp.cells, cfg["maxFraction"])
-    return StepResult(_filter_cells(exp, kept), cfg,
+    kept = fl.filter_mt_content(exp.cells, _threshold(cfg, "maxFraction"))
+    return StepResult(exp.subset_cells(kept), cfg,
                       {"mt_hist": mx.histogram(exp.cells, "fraction_mt",
                                                0.05, group=["sample"])})
 
 
 @_step("classifier")
 def classifier(exp: Experiment, config: dict) -> StepResult:
-    """F3 (classifier.r:63): emptyDrops_FDR <= 0.01; NULL rows drop
+    """F3 (classifier.r:63): emptyDrops_FDR <= FDR; NULL rows drop
     (R NA-subset semantics)."""
     cfg = {"FDR": 0.01, **config}
     if "emptyDrops_FDR" not in exp.cells.columns:
         return StepResult(exp, cfg, {})
-    kept = fl.filter_classifier_fdr(exp.cells, cfg["FDR"], "emptyDrops_FDR")
-    return StepResult(_filter_cells(exp, kept), cfg, {})
+    kept = fl.filter_classifier_fdr(exp.cells, _threshold(cfg, "FDR"),
+                                    "emptyDrops_FDR")
+    return StepResult(exp.subset_cells(kept), cfg, {})
+
+
+def _band_z(p_level: float) -> float:
+    """Two-sided normal band multiplier at level 1 - p.level."""
+    return NormalDist().inv_cdf(1.0 - p_level / 2.0)
 
 
 @_step("numGenesVsNumUmis")
 def num_genes_vs_num_umis(exp: Experiment, config: dict) -> StepResult:
-    """M4 + F11 (numGenesVsNumUmis.r:51-112): robust log-log band,
-    p.level auto = min(0.001, 1/ncells) (numGenesVsNumUmis_config.r)."""
-    cfg = dict(config)
-    banded = rg.huber_band_outliers(exp.cells, z=cfg.get("z", 3.29))
+    """M4 + F11 (numGenesVsNumUmis.r:51-112): robust log-log band at
+    level 1 - pLevel, z = Phi^-1(1 - pLevel/2) per sample."""
+    cfg = {"pLevel": 0.001, **config}
+    banded = rg.huber_band_outliers(exp.cells,
+                                    z=_threshold(cfg, "pLevel", _band_z))
     outliers = banded.filter(F.col("is_outlier"))
     kept = fl.remove_outliers(exp.cells, outliers)
-    return StepResult(_filter_cells(exp, kept), cfg,
+    return StepResult(exp.subset_cells(kept), cfg,
                       {"band": banded.select("sample", "barcode", "pred",
                                              "is_outlier")})
 
 
 @_step("doubletScores")
 def doublet_scores_step(exp: Experiment, config: dict) -> StepResult:
-    """F4 (doubletScores.r:49): threshold default 0.25, or the A7
-    singlet-max auto (doubletScores_config.r:8-16)."""
+    """F4 (doubletScores.r:49): doublet_scores <= probabilityThreshold.
+    Cells without scores are scored by the distributed grid scorer
+    (every stage a shuffle-bounded DataFrame op)."""
     cfg = {"probabilityThreshold": 0.25, **config}
     if "doublet_scores" not in exp.cells.columns:
-        # Distributed grid scorer by default: every stage is a
-        # shuffle-bounded DataFrame op, so a single sample larger than
-        # one executor's memory still works. The applyInPandas variant
-        # (db.doublet_scores) remains the opt-in small-sample path.
-        if cfg.get("scorer") == "pandas":
-            scored = db.doublet_scores(exp.expression)
-        else:
-            scored = db.doublet_scores_grid(exp.expression)
-        cells = exp.cells.join(scored, ["sample", "barcode"], "left")
-        exp = exp.with_(cells=cells)
-    if cfg.get("auto"):
-        auto = mx.singlet_max(exp.cells)
-        cfg["probabilityThreshold"] = {
-            r["sample"]: r["max_singlet_score"] for r in auto.collect()}
-    thr = cfg["probabilityThreshold"]
-    if isinstance(thr, dict):
-        spark = exp.cells.sparkSession
-        from data_ingest_spark.functions.localrel import arrow_local_df
-        thr_df = arrow_local_df(
-            spark, [(s, float(v)) for s, v in thr.items()],
-            "sample string, _thr double", ["sample", "_thr"])
-        kept = (exp.cells.join(F.broadcast(thr_df), "sample")
-                .filter(F.col("doublet_scores") <= F.col("_thr"))
-                .drop("_thr"))
-    else:
-        kept = fl.filter_doublet_score(exp.cells, float(thr))
-    return StepResult(_filter_cells(exp, kept), cfg, {})
+        scored = db.doublet_scores_grid(exp.expression)
+        exp = exp.with_(cells=exp.cells.join(scored, ["sample", "barcode"],
+                                             "left"))
+    kept = fl.filter_doublet_score(
+        exp.cells, _threshold(cfg, "probabilityThreshold"))
+    return StepResult(exp.subset_cells(kept), cfg, {})
 
 
 @_step("dataIntegration")
@@ -161,21 +176,19 @@ def data_integration(exp: Experiment, config: dict) -> StepResult:
     multi-sample (dataIntegration.r:86-112)."""
     cfg = {"nfeatures": 2000, "numPCs": 50,
            "selection_method": "vst", **config}
-    normalized = nz.log_normalize(exp.expression)
     # Seurat FindVariableFeatures(vst) selects on RAW counts
     # (dataIntegration.r:93,102); "vst_quad" swaps the loess smoother
     # for the closed-form quadratic fit (oracle-exact end to end —
-    # the m6_vst_quad contract); "dispersion" falls back to the
-    # raw-variance ranking of normalized values.
-    if cfg["selection_method"] == "vst":
-        hvgs = nz.find_variable_features_vst(
-            exp.expression, cfg["nfeatures"]).cache()
-    elif cfg["selection_method"] == "vst_quad":
-        hvgs = nz.find_variable_features_quad(
-            exp.expression, cfg["nfeatures"]).cache()
-    else:
-        hvgs = nz.highly_variable_genes(normalized, cfg["nfeatures"],
-                                        value_col="normalized").cache()
+    # the m6_vst_quad contract).
+    select = {"vst": nz.find_variable_features_vst,
+              "vst_quad": nz.find_variable_features_quad}
+    if cfg["selection_method"] not in select:
+        raise ValueError(
+            f"dataIntegration: unknown selection_method "
+            f"{cfg['selection_method']!r}; expected one of {sorted(select)}")
+    normalized = nz.log_normalize(exp.expression)
+    hvgs = select[cfg["selection_method"]](
+        exp.expression, cfg["nfeatures"]).cache()
     scaled = nz.scale_data(
         normalized.join(F.broadcast(hvgs.select("gene")), "gene"),
         n_cells_src=exp.expression)
@@ -202,12 +215,8 @@ def data_integration(exp: Experiment, config: dict) -> StepResult:
     red = rd.pc_columns(pcs, k)
     n_samples = exp.cells.select("sample").distinct().count()
     if n_samples > 1 and cfg.get("integrate", True):
-        # distributed MNN by default (LSH joins, no matrix collect);
-        # the driver-side v1 stays available via integration="driver"
-        if cfg.get("integration") == "driver":
-            red = ig.integrate_mnn(red)
-        else:
-            red = ig.integrate_mnn_distributed(red)
+        # distributed MNN (LSH joins, no matrix collect)
+        red = ig.integrate_mnn_distributed(red)
     misc = {**exp.misc, "explained_variance": explained, "numPCs": k}
     return StepResult(exp.with_(normalized=normalized, reductions=red,
                                 misc=misc), cfg, {})
@@ -217,13 +226,12 @@ def data_integration(exp: Experiment, config: dict) -> StepResult:
 def configure_embedding(exp: Experiment, config: dict) -> StepResult:
     """M12 kNN/SNN → M13 clustering → M10 embedding
     (configureEmbedding.r:73-115)."""
-    cfg = {"k": 20, "resolution": 0.5, "method": "spectral",
-           "computeEmbedding": True, **config}
+    cfg = {"k": 20, "computeEmbedding": True, **config}
     # knn_auto: exact while the matrix fits the staging ceiling,
     # LSH-bucketed beyond it — the pipeline never hard-wires the
     # collect-everything strategy.
     knn = nb.knn_auto(_with_vec(exp.reductions), k=cfg["k"],
-                      max_exact_rows=cfg.get("exactKnnCeiling", 2_000_000))
+                      max_exact_rows=2_000_000)
     snn = nb.snn_graph(knn, k=cfg["k"])
     # Fixed-point vote weights (clustering.LPA_SCALE): integer sums
     # make the cluster assignment independent of float summation
@@ -265,22 +273,16 @@ DEFAULT_ORDER = ["cellSizeDistribution", "mitochondrialContent", "classifier",
 
 
 def _truncate(new: Experiment, old: Experiment) -> Experiment:
-    """Lazy localCheckpoint on every slot a step changed. Steps contain
-    eager actions (PCA fit, auto-threshold collects, LPA rounds); without
-    truncation each one re-executes the whole upstream chain (doublet
-    scoring, IRLS, ...) and the nested plan blows up Catalyst analysis
-    time. At cluster scale the same boundaries are where the reference
-    writes its stage RDS checkpoints (§3 IR list) — swap localCheckpoint
-    for a Parquet write/read for fault-tolerant multi-job runs.
+    """Lazy localCheckpoint on every slot a step changed, so the next
+    step's eager actions (PCA fit, kNN count, LPA rounds) start from a
+    truncated plan instead of re-executing the upstream chain. These
+    are the stage boundaries where the reference writes its RDS
+    checkpoints (§3 IR list).
 
-    The EXPRESSION slot checkpoints only once, at the run_qc entry
-    (old.expression is None): per-step it only ever changes by a
-    semi-join against the step's (checkpointed) kept cells, so
-    re-deriving it is one flat scan — while each localCheckpoint call
-    costs a full physical-planning pass on the driver, which at three
-    filter steps per p2 run dominated the composite's wall time
-    (round-6 verdict ask #7: checkpoint machinery, not execution, was
-    the drift)."""
+    The expression slot checkpoints once, at the run_qc entry
+    (old.expression is None): a step changes it only by a semi-join
+    against the step's checkpointed kept cells, which re-derives in
+    one flat scan."""
     kw = {}
     for slot in ("expression", "cells", "normalized", "reductions"):
         a, b = getattr(new, slot), getattr(old, slot)
@@ -307,20 +309,27 @@ def run_qc(exp: Experiment, config: dict | None = None,
 
 def derive_config_per_sample(exp: Experiment) -> dict:
     """add_custom_config_per_sample (4_Prepare_experiment.r:310-334):
-    per-sample auto thresholds — W2 knee for minCellSize, A7 singlet
-    max for probabilityThreshold, M4's auto p.level."""
-    knee = {r["sample"]: r["inflection_ncount"]
-            for r in wd.barcode_inflection(exp.cells, 100.0).collect()}
-    cfg: dict[str, Any] = {"cellSizeDistribution": {}}
-    for s, v in knee.items():
-        cfg["cellSizeDistribution"][f"sample-{s}"] = {
-            "minCellSize": float(v), "binStep": 200}
-    if "doublet_scores" in exp.cells.columns:
-        auto = {r["sample"]: r["max_singlet_score"]
-                for r in mx.singlet_max(exp.cells).collect()}
-        cfg["doubletScores"] = {
-            f"sample-{s}": {"probabilityThreshold": float(v)}
-            for s, v in auto.items()}
-    n = exp.cells.count()
-    cfg["numGenesVsNumUmis"] = {"pLevel": min(0.001, 1.0 / max(n, 1))}
+    the only place the auto thresholds are computed, each returned as a
+    ``sample-<s>`` override of its step — the W2 knee as minCellSize,
+    M4's p.level = min(0.001, 1/ncells), and the A7 singlet max as
+    probabilityThreshold when the cells carry doublet scores. One
+    collect; a sample without a knee or a singlet gets no override."""
+    per = (exp.cells.groupBy("sample").agg(F.count("*").alias("n"))
+           .join(wd.barcode_inflection(exp.cells, 100.0), "sample", "left"))
+    doublets = "doublet_scores" in exp.cells.columns
+    if doublets:
+        per = per.join(mx.singlet_max(exp.cells), "sample", "left")
+    cfg: dict[str, Any] = {"cellSizeDistribution": {},
+                           "numGenesVsNumUmis": {}}
+    if doublets:
+        cfg["doubletScores"] = {}
+    for r in per.collect():
+        key = f"{_SAMPLE}{r['sample']}"
+        if r["inflection_ncount"] is not None:
+            cfg["cellSizeDistribution"][key] = {
+                "minCellSize": float(r["inflection_ncount"]), "binStep": 200}
+        cfg["numGenesVsNumUmis"][key] = {"pLevel": min(0.001, 1.0 / r["n"])}
+        if doublets and r["max_singlet_score"] is not None:
+            cfg["doubletScores"][key] = {
+                "probabilityThreshold": float(r["max_singlet_score"])}
     return cfg

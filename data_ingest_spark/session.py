@@ -19,6 +19,19 @@ import os
 from pyspark.sql import SparkSession
 
 
+def _default_driver_memory() -> str:
+    """Half the host's memory, at most 24g: the JVM grows its heap
+    toward the maximum, and the Python workers and the OS need the
+    rest of the host."""
+    try:
+        with open("/proc/meminfo") as fh:
+            kib = next(int(line.split()[1]) for line in fh
+                       if line.startswith("MemTotal:"))
+    except (OSError, StopIteration, ValueError):
+        return "24g"
+    return f"{max(1024, min(24 * 1024, kib // 2048))}m"
+
+
 def get_spark(app_name: str = "data-ingest-spark", cpus: int | None = None) -> SparkSession:
     if cpus is None:
         cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "0")) or os.cpu_count() or 4
@@ -45,13 +58,14 @@ def get_spark(app_name: str = "data-ingest-spark", cpus: int | None = None) -> S
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.ui.enabled", "false")
-        # Local mode is ONE JVM holding all 32 executor threads'
-        # working sets plus every broadcast and checkpoint block: an
-        # 8g heap measured ~1.3x slower across a 60-query suite purely
-        # from old-gen GC churn (r4 bench regression). 24g matches the
-        # machine (128 GiB); on a real cluster executors get their own
-        # heaps and this knob is the driver only.
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "24g"))
+        # Local mode is ONE JVM holding every executor thread's working
+        # set plus every broadcast and checkpoint block: an 8g heap
+        # measured ~1.3x slower than 24g across a 60-query suite on a
+        # 32-core host, from old-gen GC churn. On a real cluster
+        # executors get their own heaps and this knob is the driver only.
+        .config("spark.driver.memory",
+                os.environ.get("SPARK_GRAFT_DRIVER_MEM")
+                or _default_driver_memory())
         # The Janino compile cache holds 100 codegen units by default;
         # a 70-query suite generates several hundred distinct
         # WholeStageCodegen sources, so later queries thrash the cache

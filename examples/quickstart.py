@@ -2,11 +2,11 @@
 here instead.
 
 Builds a synthetic two-sample CellRanger directory, ingests it with the
-10x reader, runs the full QC chain (size filter → MT content →
-emptyDrops classifier → gene/UMI regression band → doublets →
-normalize → HVG → scale → PCA → kNN/SNN → clustering), derives
-per-sample auto thresholds, and writes the reference's export set
-(TSV + MTX + cell-sets JSON).
+10x reader, derives per-sample auto thresholds, runs the full QC chain
+with them (size filter → MT content → emptyDrops classifier → gene/UMI
+regression band → doublets → normalize → HVG → scale → PCA → kNN/SNN →
+clustering), and writes the reference's export set (TSV + MTX +
+cell-sets JSON).
 
     python examples/quickstart.py [workdir]
 
@@ -72,16 +72,19 @@ def main() -> int:
     cells = assemble_cells(expr, genes=genes)
     exp = Experiment(expression=expr, cells=cells, genes=genes)
 
+    # per-sample auto thresholds (knee minCellSize, pLevel) as
+    # ``sample-<s>`` overrides, merged step by step with explicit values
     auto_cfg = derive_config_per_sample(exp)
-    print(f"derived per-sample config: {auto_cfg}")
-
-    final, cfg = run_qc(exp, {
-        "cellSizeDistribution": {"minCellSize": 5.0},
+    overrides = {
         "doubletScores": {"probabilityThreshold": 1.0},
         "dataIntegration": {"nfeatures": 40, "numPCs": 5,
                             "integrate": False},
         "configureEmbedding": {"k": 8, "computeEmbedding": False},
-    })
+    }
+    final, cfg = run_qc(exp, {
+        step: {**auto_cfg.get(step, {}), **overrides.get(step, {})}
+        for step in {**auto_cfg, **overrides}})
+    print(f"applied cell-size config: {cfg['cellSizeDistribution']}")
 
     out = os.path.join(work, "output")
     os.makedirs(out, exist_ok=True)

@@ -170,3 +170,17 @@ def test_pipeline_embedding_routes_distributed_above_ceiling(spark):
     emb = out.plot_data["embedding"]
     assert set(emb.columns) == {"id", "x", "y", "method"}
     assert emb.select("method").distinct().collect()[0][0] == "spectral_dist"
+
+
+def test_session_heap_fits_the_host(spark):
+    """Unless SPARK_GRAFT_DRIVER_MEM sets it, the session's heap is at
+    most half the host's memory: the JVM grows its heap toward the
+    maximum, and the Python workers need the rest."""
+    import os
+    if os.environ.get("SPARK_GRAFT_DRIVER_MEM"):
+        pytest.skip("heap set by SPARK_GRAFT_DRIVER_MEM")
+    with open("/proc/meminfo") as fh:
+        kib = next(int(line.split()[1]) for line in fh
+                   if line.startswith("MemTotal:"))
+    heap = spark.sparkContext.getConf().get("spark.driver.memory")
+    assert heap.endswith("m") and int(heap[:-1]) <= kib // 2048

@@ -186,6 +186,9 @@ def test_mnn_scoring_exchange_gate(spark):
     plan = ig.integrate_mnn_exact(df)._jdf.queryExecution() \
         .executedPlan().toString()
     assert "RoundRobinPartitioning" not in plan
+
+
+def test_assemble_cells_and_run_qc(spark, small_expr):
     genes = spark.createDataFrame(
         [(f"G{g:02d}", f"SYM{g}" if g else "MT-X") for g in range(20)],
         "gene string, name string")
@@ -210,7 +213,9 @@ def test_mnn_scoring_exchange_gate(spark):
 
     derived = derive_config_per_sample(exp.with_(cells=final.cells))
     assert any(k.startswith("sample-") for k in derived["cellSizeDistribution"])
-    assert derived["numGenesVsNumUmis"]["pLevel"] <= 0.001
+    per_sample = derived["numGenesVsNumUmis"]
+    assert sorted(per_sample) == ["sample-sa", "sample-sb"]
+    assert all(v["pLevel"] <= 0.001 for v in per_sample.values())
 
 
 def test_integrate_mnn_distributed_matches_v1(spark, pcs):

@@ -15,15 +15,13 @@ def test_barcode_rank(expr):
 
 
 def test_dense_ids_contract(sf_expr):
-    """cells_id must be dense 0..n-1 in (sample, barcode) order — both
-    implementations, checked on the real sf0.001 table."""
+    """cells_id must be dense 0..n-1 in (sample, barcode) order,
+    checked on the real sf0.001 table."""
     cells = mx.cell_counts(sf_expr).select("sample", "barcode")
     n = cells.count()
-    for impl in (wd.dense_ids, wd.dense_ids_scalable):
-        out = impl(cells)
-        ids = [r["cells_id"] for r in
-               out.orderBy("sample", "barcode").collect()]
-        assert ids == list(range(n)), impl.__name__
+    ids = [r["cells_id"] for r in wd.dense_ids_scalable(cells)
+           .orderBy("sample", "barcode").collect()]
+    assert ids == list(range(n))
 
 
 def test_dedup_gene_names(spark):
