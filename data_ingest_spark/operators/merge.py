@@ -16,15 +16,12 @@ from functools import reduce
 from pyspark.sql import DataFrame, functions as F
 
 
-def merge_samples(per_sample: list[DataFrame], prefix_barcodes: bool = True) -> DataFrame:
+def merge_samples(per_sample: list[DataFrame]) -> DataFrame:
     """U1: union per-sample expression DataFrames; prefix barcodes with
     the sample name (add.cell.ids) so barcodes are globally unique."""
     merged = reduce(lambda a, b: a.unionByName(b), per_sample)
-    if prefix_barcodes:
-        merged = merged.withColumn(
-            "barcode", F.concat_ws("_", F.col("sample"), F.col("barcode"))
-        )
-    return merged
+    return merged.withColumn(
+        "barcode", F.concat_ws("_", F.col("sample"), F.col("barcode")))
 
 
 def union_dedup(frames: list[DataFrame]) -> DataFrame:

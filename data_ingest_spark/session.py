@@ -18,6 +18,8 @@ import os
 
 from pyspark.sql import SparkSession
 
+_PACKAGE_PARENT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
 
 def _default_driver_memory() -> str:
     """Half the host's memory, at most 24g: the JVM grows its heap
@@ -57,6 +59,10 @@ def get_spark(app_name: str = "data-ingest-spark", cpus: int | None = None) -> S
         # harness.registry.events_df).
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
+        # Python workers import this package (data sources, UDFs) from
+        # wherever the driver was started; Spark merges this entry with
+        # the worker's own PYTHONPATH.
+        .config("spark.executorEnv.PYTHONPATH", _PACKAGE_PARENT)
         .config("spark.ui.enabled", "false")
         # Local mode is ONE JVM holding every executor thread's working
         # set plus every broadcast and checkpoint block: an 8g heap

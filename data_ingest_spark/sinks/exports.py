@@ -8,7 +8,7 @@ correctness scope behind an interface).
 
 Single-file exports (`coalesce(1)`) mirror the reference's file
 contract and are driver-light: data streams through one task, never
-through the driver. The partitioned variants are the 100 TB path.
+through the driver.
 """
 
 from __future__ import annotations
@@ -20,12 +20,10 @@ import os
 from pyspark.sql import DataFrame, functions as F
 
 
-def write_tsv(df: DataFrame, path: str, header: bool = True,
-              single_file: bool = True) -> None:
-    """S6: TSV sink. single_file=True reproduces the reference's
-    one-file contract (write.table); False keeps full parallelism."""
-    w = (df.coalesce(1) if single_file else df).write.mode("overwrite")
-    w.csv(path, sep="\t", header=header)
+def write_tsv(df: DataFrame, path: str) -> None:
+    """S6: TSV sink: one file with a header line, the reference's
+    write.table contract."""
+    df.coalesce(1).write.mode("overwrite").csv(path, sep="\t", header=True)
 
 
 def write_mtx(expr: DataFrame, path: str, value_col: str = "count") -> None:

@@ -12,34 +12,37 @@ from data_ingest_spark.sinks import exports as sk
 from data_ingest_spark.sources import tables as tb, tenx as tx
 
 
+TRIPLETS = [(1, 1, 5), (1, 2, 3), (2, 2, 7), (3, 1, 1)]
+FEATURES = ["ENSG1\tACTB\tGene Expression",
+            "ENSG2\tMT-CO1\tGene Expression",
+            "ENSG3\tTP53\tGene Expression",
+            "ENSG4\tGAPDH\tGene Expression"]     # no counts
+BARCODES = ["AAAC-1", "GGGT-1"]
+MTX_HEADER = ["%%MatrixMarket matrix coordinate integer general",
+              "% extra comment"]
+MTX = MTX_HEADER + ["4 2 4"] + [f"{g} {c} {v}" for g, c, v in TRIPLETS]
+
+
+def _write_sample(d, mtx_lines, gz=True):
+    """One CellRanger sample dir: V3 gzipped, or V2 plain text."""
+    d.mkdir()
+    names = (["features.tsv.gz", "barcodes.tsv.gz", "matrix.mtx.gz"] if gz
+             else ["genes.tsv", "barcodes.tsv", "matrix.mtx"])
+    for fname, lines in zip(names, [FEATURES, BARCODES, mtx_lines]):
+        text = "\n".join(lines) + "\n"
+        if gz:
+            with gzip.open(d / fname, "wt") as fh:
+                fh.write(text)
+        else:
+            (d / fname).write_text(text)
+
+
 @pytest.fixture(scope="module")
 def tenx_dir(tmp_path_factory):
     """Two-sample 10x input: sample_a V3 (gz), sample_b V2 (plain)."""
     root = tmp_path_factory.mktemp("tenx")
-    triplets = [(1, 1, 5), (1, 2, 3), (2, 2, 7), (3, 1, 1)]
-    features = ["ENSG1\tACTB\tGene Expression",
-                "ENSG2\tMT-CO1\tGene Expression",
-                "ENSG3\tTP53\tGene Expression"]
-    barcodes = ["AAAC-1", "GGGT-1"]
-    mtx = ["%%MatrixMarket matrix coordinate integer general",
-           "% extra comment",
-           "3 2 4"] + [f"{g} {c} {v}" for g, c, v in triplets]
-
-    a = root / "sample_a"
-    a.mkdir()
-    for fname, lines in [("features.tsv.gz", features),
-                         ("barcodes.tsv.gz", barcodes),
-                         ("matrix.mtx.gz", mtx)]:
-        with gzip.open(a / fname, "wt") as fh:
-            fh.write("\n".join(lines) + "\n")
-
-    b = root / "sample_b"
-    b.mkdir()
-    for fname, lines in [("genes.tsv", features),
-                         ("barcodes.tsv", barcodes),
-                         ("matrix.mtx", mtx)]:
-        (b / fname).write_text("\n".join(lines) + "\n")
-
+    _write_sample(root / "sample_a", MTX)
+    _write_sample(root / "sample_b", MTX, gz=False)
     (root / "meta.json").write_text(json.dumps({
         "name": "t", "organism": "hsapiens", "input": {"type": "10x"},
         "samples": ["sample_a", "sample_b"],
@@ -54,23 +57,111 @@ def test_detect_layout(tenx_dir):
         tx.detect_layout(tenx_dir)
 
 
-def test_read_10x_sample_triplets(spark, tenx_dir):
-    expr, annots = tx.read_10x_sample(
-        spark, os.path.join(tenx_dir, "sample_a"), "sample_a")
-    got = {(r["barcode"], r["gene"]): r["count"] for r in expr.collect()}
-    assert got == {("AAAC-1", "ENSG1"): 5, ("GGGT-1", "ENSG1"): 3,
-                   ("GGGT-1", "ENSG2"): 7, ("AAAC-1", "ENSG3"): 1}
-    assert {(r["gene"], r["name"]) for r in annots.collect()} == {
-        ("ENSG1", "ACTB"), ("ENSG2", "MT-CO1"), ("ENSG3", "TP53")}
-
-
 def test_read_10x_experiment_merges(spark, tenx_dir):
+    """V3-gz and V2-plain samples: every entry once, with its sample,
+    barcode and gene id; annotations hold every features row, the gene
+    without counts included, once across samples."""
     cfg = tb.load_config(os.path.join(tenx_dir, "meta.json"))
     expr, annots = tx.read_10x_experiment(spark, tenx_dir, cfg["samples"])
-    assert expr.count() == 8  # 4 nonzeros x 2 samples
-    assert {r["sample"] for r in expr.select("sample").distinct().collect()} \
-        == {"sample_a", "sample_b"}
-    assert annots.count() == 3  # union-deduped across samples
+    assert expr.schema.simpleString() == (
+        "struct<sample:string,barcode:string,gene:string,count:int>")
+    want = sorted((s, BARCODES[c - 1], f"ENSG{g}", v)
+                  for s in ("sample_a", "sample_b") for g, c, v in TRIPLETS)
+    assert sorted(tuple(r) for r in expr.collect()) == want
+    assert sorted(tuple(r) for r in annots.collect()) == [
+        ("ENSG1", "ACTB"), ("ENSG2", "MT-CO1"), ("ENSG3", "TP53"),
+        ("ENSG4", "GAPDH")]
+
+
+def test_read_10x_experiment_matches_fixture_truth(spark, tmp_path):
+    """perfbench's ``tiny`` 10x fixture, read by Spark, against the same
+    files read back with pandas."""
+    from perfbench import fixtures as fx
+    from perfbench.workloads import QcFull
+    fx.tenx_experiment(str(tmp_path), 1, QcFull.sizes["tiny"])
+    truth = fx.load_truth(str(tmp_path))
+    samples = [t.name for t in truth]
+    expr, annots = tx.read_10x_experiment(spark, str(tmp_path), samples)
+    got = expr.toPandas()
+    assert list(got.dtypes.astype(str)) == ["object", "object", "object",
+                                            "int32"]
+    want_annots = set()
+    for s in samples:
+        coo, feats = fx.read_sample_coo(os.path.join(tmp_path, s))
+        mine = got[got["sample"] == s][["barcode", "gene", "count"]]
+        assert sorted(map(tuple, mine.to_numpy().tolist())) \
+            == sorted(map(tuple, coo.to_numpy().tolist()))
+        want_annots |= set(zip(feats["gene"], feats["name"]))
+    assert len(got) == sum(t.nnz for t in truth)
+    rows = [tuple(r) for r in annots.collect()]
+    assert len(rows) == len(set(rows)) and set(rows) == want_annots
+
+
+MALFORMED = {
+    "index 0": (["4 2 1", "0 1 5"], "line 4: index (0, 1)"),
+    "index past the end": (["4 2 1", "1 3 5"], "line 4: index (1, 3)"),
+    "two fields": (["4 2 2", "1 1 5", "2 2"],
+                   "line 5: expected 'gene cell count'"),
+    "garbled count": (["4 2 1", "1 1 x"], "line 4: expected 'gene cell count'"),
+    "short matrix": (["4 2 3", "1 1 5", "2 2 7"],
+                     "header declares 3 entries, found 2"),
+    "features count": (["5 2 1", "1 1 5"],
+                       "line 3: header declares 5 genes but"),
+    "barcodes count": (["4 1 1", "1 1 5"],
+                       "line 3: header declares 1 barcodes but"),
+    "size line": (["4 2", "1 1 5"], "line 3: size line '4 2'"),
+}
+
+
+@pytest.mark.parametrize("case", sorted(MALFORMED))
+def test_malformed_matrix_is_named(spark, tmp_path, case):
+    """Each defect fails the read with a ValueError naming the matrix
+    file and the line; raised in the task, it reaches the driver
+    inside the PythonException's message."""
+    from pyspark.errors import PythonException
+    body, message = MALFORMED[case]
+    _write_sample(tmp_path / "s", MTX_HEADER + body)
+    expr, _ = tx.read_10x_experiment(spark, str(tmp_path), ["s"])
+    with pytest.raises(PythonException) as err:
+        expr.collect()
+    path = os.path.join(tmp_path, "s", "matrix.mtx.gz")
+    assert f"ValueError: {path}" in str(err.value)
+    assert message in str(err.value)
+
+
+def test_workers_import_the_package_without_pythonpath(tmp_path):
+    """A driver started outside the checkout, with PYTHONPATH unset,
+    still reads 10x input and runs a pandas UDF: the session tells its
+    Python workers where the package is."""
+    import subprocess
+    import sys
+    import textwrap
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    _write_sample(tmp_path / "s", MTX)
+    script = textwrap.dedent(f"""
+        import sys
+        sys.path.insert(0, {root!r})
+        from data_ingest_spark.session import get_spark
+        from data_ingest_spark.sources.tenx import read_10x_experiment
+
+        def total(frames):
+            import data_ingest_spark
+            for f in frames:
+                yield f[["count"]]
+
+        spark = get_spark("no-pythonpath", cpus=2)
+        expr, _ = read_10x_experiment(spark, {str(tmp_path)!r}, ["s"])
+        print("sum", expr.mapInPandas(total, "count int")
+              .groupBy().sum("count").first()[0])
+        spark.stop()
+    """)
+    env = {k: v for k, v in os.environ.items() if k != "PYTHONPATH"}
+    env["SPARK_GRAFT_DRIVER_MEM"] = "1g"
+    run = subprocess.run([sys.executable, "-c", script], cwd=tmp_path,
+                         env=env, capture_output=True, text=True,
+                         timeout=300)
+    assert run.returncode == 0, run.stderr[-3000:]
+    assert "sum 16" in run.stdout
 
 
 def test_load_config_validation(tenx_dir, tmp_path):
@@ -233,26 +324,6 @@ def test_webdataset_roundtrip_deterministic(spark, tmp_path):
     d2 = {s: hashlib.md5(open(os.path.join(out2, s), "rb").read()).hexdigest()
           for s in os.listdir(out2) if s.endswith(".tar")}
     assert d1 == d2
-
-
-def test_tenx_python_datasource_matches_native_reader(spark, tenx_dir):
-    from data_ingest_spark.sources.tenx_datasource import TenxDataSource
-    spark.dataSource.register(TenxDataSource)
-    ds = (spark.read.format("tenx").option("path", tenx_dir)
-          .option("samples", "sample_a,sample_b").load())
-    got = {(r["sample"], r["barcode"], r["gene"]): (r["count"],
-                                                    r["gene_name"])
-           for r in ds.collect()}
-    native, _ = tx.read_10x_experiment(spark, tenx_dir,
-                                       ["sample_a", "sample_b"])
-    want = {(r["sample"], r["barcode"], r["gene"]): r["count"]
-            for r in native.collect()}
-    assert set(got) == set(want)
-    assert all(got[k][0] == want[k] for k in want)
-    assert got[("sample_a", "GGGT-1", "ENSG2")][1] == "MT-CO1"
-    # auto-discovery: omit the samples option, dirs found from layout
-    auto = spark.read.format("tenx").option("path", tenx_dir).load()
-    assert auto.count() == ds.count()
 
 
 def test_upload_records_foreach_partition(spark, tmp_path):
