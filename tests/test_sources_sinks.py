@@ -57,6 +57,20 @@ def test_detect_layout(tenx_dir):
         tx.detect_layout(tenx_dir)
 
 
+def test_read_10x_sample_triplets(spark, tenx_dir):
+    """One V3-gz sample: each MTX triplet lands on its barcode and gene id;
+    annotations hold every features row."""
+    expr, annots = tx.read_10x_experiment(spark, tenx_dir, ["sample_a"])
+    got = {(r["barcode"], r["gene"]): r["count"] for r in expr.collect()}
+    assert got == {("AAAC-1", "ENSG1"): 5, ("GGGT-1", "ENSG1"): 3,
+                   ("GGGT-1", "ENSG2"): 7, ("AAAC-1", "ENSG3"): 1}
+    assert {r["sample"] for r in expr.select("sample").collect()} \
+        == {"sample_a"}
+    assert {(r["gene"], r["name"]) for r in annots.collect()} == {
+        ("ENSG1", "ACTB"), ("ENSG2", "MT-CO1"), ("ENSG3", "TP53"),
+        ("ENSG4", "GAPDH")}
+
+
 def test_read_10x_experiment_merges(spark, tenx_dir):
     """V3-gz and V2-plain samples: every entry once, with its sample,
     barcode and gene id; annotations hold every features row, the gene
